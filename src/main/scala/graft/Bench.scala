@@ -117,7 +117,9 @@ object Bench {
 
     // the control is read out of the harness results lazily so partial
     // (shutdown-hook) records also carry whatever was measured
-    def controlSec: Option[Double] = results.get(controlName)
+    // (null when any control rep threw: a time-to-exception is no window
+    // measurement, and every later normalization divides by it)
+    def controlSec: Option[Double] = harness.official(controlName)
     def controlJson: String = controlSec.map(sec).getOrElse("null")
 
     def fullJson(partial: Boolean): String = {
@@ -197,10 +199,8 @@ object Bench {
     // SPARK_GRAFT_BENCH_ONLY) so every A/B run self-reports its window;
     // it interleaves round-robin with the gate reps like any other leg
     // and is filtered back out of "queries"/total above.
-    harness.run((controlName -> (() => {
-      try controlLeg()
-      catch { case e: Throwable => System.err.println(s"[bench] control: $e") }
-    })) +: ordered.map { case (name, fn) =>
+    harness.run((controlName -> harness.failSafe(controlName)(() => controlLeg()))
+      +: ordered.map { case (name, fn) =>
       name -> (() => runOne(name, fn))
     })
 
@@ -222,7 +222,6 @@ object Bench {
     // GB — well inside the bench JVM.
     val probeReps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "2").toInt
     val probeHarness = new graft.core.BenchHarness(probeReps, wallLimit)
-    val failedProbeLegs = scala.collection.mutable.Set.empty[String]
     // SPARK_GRAFT_SKIP_PROBE=1: builder-local iteration aid (like
     // SPARK_GRAFT_BENCH_ONLY) — run the full GATE suite but skip the
     // scale probe, for full-suite-context A/B runs where only the gate
@@ -632,27 +631,18 @@ object Bench {
         // were exactly the cross-leg storage pressure behind the r17/r18
         // probe instabilities (phash 0.45x, minhash_precollapse 10x run
         // spread). Staging cost itself stays inside the timed region.
-        name -> (() => try graft.core.Staging.scoped(fn()) catch {
-          case e: Throwable =>
-            // a throw mid-leg leaves the harness a time-to-exception —
-            // a bogus (usually tiny) number the min estimator would
-            // then publish as the leg's official value. Mark the leg
-            // failed; its results are dropped after the run so the
-            // record reads the documented -1, never a fake fast time.
-            failedProbeLegs += name
-            System.err.println(s"[probe] $name: $e")
-        })
+        // A throw mid-leg leaves the harness a time-to-exception: the
+        // leg is marked failed and `pt` reads the documented -1 for
+        // it, never a fake fast time.
+        name -> probeHarness.failSafe(name)(() => graft.core.Staging.scoped(fn()))
       }
       probeHarness.run(probeLegs)
-      failedProbeLegs.foreach { n =>
-        probeHarness.results.remove(n); probeHarness.medians.remove(n)
-      }
       bloomBuild.unpersist(); bigLi.unpersist(); bigEv.unpersist()
       bigImg.unpersist(); stagedBytes.unpersist(); bigEmb.unpersist()
       big.unpersist(); blmModel.release()
       sigHashes.unpersist()
 
-      def pt(name: String): Double = probeHarness.results.getOrElse(name, -1.0)
+      def pt(name: String): Double = probeHarness.official(name).getOrElse(-1.0)
       val tFilter = pt("filter_chain"); val tExact = pt("exact_dedup")
       val tLsh = pt("minhash_lsh_capped"); val tLshPre = pt("minhash_precollapse")
       val tDup = pt("dup_ngram"); val tQuality = pt("quality_battery")
@@ -689,7 +679,7 @@ object Bench {
       val pd = probeHarness.detailJson(probeHarness.guarded.toSeq ++ probeUnstable
         ++ probeHarness.stabilized.toSeq)
       val ps = probeHarness.stabilized.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val pf = failedProbeLegs.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val pf = probeHarness.failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
       val evidence = s""""probe_estimator":"warm_min_interleaved_retry","probe_reps":$probeReps,"probe_guarded":$pg,"probe_retried":$pr,"probe_unstable":$pu,"probe_stabilized":$ps,"probe_failed":$pf,"probe_detail":$pd"""
 
       f"""{"rows":$n,"replication":10,"filter_chain_sec":$tFilter%.3f,"exact_dedup_sec":$tExact%.3f,"minhash_lsh_capped_sec":$tLsh%.3f,"minhash_precollapse_sec":$tLshPre%.3f,"minhash_precollapse_docs_per_sec":${n / tLshPre}%.0f,"dup_ngram_sec":$tDup%.3f,"curation_stack_sec":$tStack%.3f,"curation_stack_docs_per_sec":${n / tStack}%.0f,"quality_battery_sec":$tQuality%.3f,"quality_battery_docs_per_sec":${n / tQuality}%.0f,"dsir_score_sec":$tDsir%.3f,"dsir_docs_per_sec":${n / tDsir}%.0f,"url_filter_sec":$tUrl%.3f,"url_filter_docs_per_sec":${n / tUrl}%.0f,"bm25_sec":$tBm25%.3f,"bm25_docs_per_sec":${n / tBm25}%.0f,"pagerank5_sec":$tPr%.3f,"pagerank_nodes_per_sec":${n / tPr}%.0f,"filter_docs_per_sec":${n / tFilter}%.0f,"exact_dedup_docs_per_sec":${n / tExact}%.0f,"minhash_lsh_docs_per_sec":${n / tLsh}%.0f,"dup_ngram_docs_per_sec":${n / tDup}%.0f,"vectors":$nv,"semantic_dedup_sec":$tSem%.3f,"semantic_dedup_vecs_per_sec":${nv / tSem}%.0f,"semantic_dedup_probed_sec":$tSemProbed%.3f,"semantic_dedup_probed_vecs_per_sec":${nv / tSemProbed}%.0f,"semantic_dedup_anchored_sec":$tSemAnchored%.3f,"semantic_dedup_anchored_vecs_per_sec":${nv / tSemAnchored}%.0f,"semantic_dedup_sampled_fit_sec":$tSemSampled%.3f,"semantic_dedup_sampled_fit_vecs_per_sec":${nv / tSemSampled}%.0f,"pca_fit_project_sec":$tPcaFp%.3f,"pca_fit_project_vecs_per_sec":${nv / tPcaFp}%.0f,"knn_join_100q_sec":$tKnn%.3f,"images":$ni,"phash_hash_sec":$tPhashHash%.3f,"phash_hash_images_per_sec":${ni / tPhashHash}%.0f,"phash_exact_dedup_sec":$tPhashExact%.3f,"phash_exact_images_per_sec":${ni / tPhashExact}%.0f,"phash_near_capped_sec":$tPhashNear%.3f,"phash_near_images_per_sec":${ni / tPhashNear}%.0f,"events":$ne,"asof_join_sec":$tAsof%.3f,"asof_events_per_sec":${ne / tAsof}%.0f,"html_extract_sec":$tHtml%.3f,"html_extract_docs_per_sec":${n / tHtml}%.0f,"novelty_sec":$tNovelty%.3f,"novelty_docs_per_sec":${n / tNovelty}%.0f,"triangle_sec":$tTri%.3f,"triangle_nodes_per_sec":${nNodes / tTri}%.0f,"inverted_index_sec":$tInv%.3f,"inverted_index_docs_per_sec":${n / tInv}%.0f,"ols_fit_sec":$tOls%.3f,"ols_docs_per_sec":${n / tOls}%.0f,"logreg_fit_score_sec":$tLogreg%.3f,"logreg_docs_per_sec":${n / tLogreg}%.0f,"filter_100x_rows":$n100,"filter_100x_sec":$tFilter100%.3f,"filter_100x_docs_per_sec":${n100 / tFilter100}%.0f,"cdc_merge_sec":$tCdc%.3f,"cdc_events_per_sec":${ne / tCdc}%.0f,"lpa4_sec":$tLpa%.3f,"lpa_nodes_per_sec":${nNodes / tLpa}%.0f,"lineitem_rows":$nl,"profile_sec":$tProfile%.3f,"profile_cells_per_sec":${nl * profCols.size / tProfile}%.0f,"bloom_semi_sec":$tBloomSemi%.3f,"plain_semi_sec":$tPlainSemi%.3f,"bigram_lm_sec":$tBigram%.3f,"bigram_lm_docs_per_sec":${n / tBigram}%.0f,"bigram_lm_score_frozen_sec":$tBigramScore%.3f,"bigram_lm_score_frozen_docs_per_sec":${n / tBigramScore}%.0f,"multiprobe_knn_100q_sec":$tMultiProbe%.3f,"minhash_mix_kmin_sec":$tMixKmin%.3f,"minhash_mix_oph_sec":$tMixOph%.3f,$evidence}"""

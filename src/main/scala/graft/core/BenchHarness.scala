@@ -49,6 +49,27 @@ final class BenchHarness(reps: Int, wallLimit: Double) {
     */
   val repTimes: mutable.LinkedHashMap[String, mutable.ArrayBuffer[Double]] =
     mutable.LinkedHashMap.empty
+  /** Legs whose thunk threw on at least one run (warmup included) — see
+    * [[failSafe]]. Their times are times-to-exception, not measurements.
+    */
+  val failed: mutable.LinkedHashSet[String] = mutable.LinkedHashSet.empty
+
+  /** Wrap a leg so a throw is recorded in [[failed]] and logged instead
+    * of aborting the suite. The harness still times the run, but a time
+    * to exception is usually tiny and the min estimator would publish it
+    * as the leg's official value — read a leg through [[official]].
+    */
+  def failSafe(name: String, log: String => Unit = System.err.println)
+      (fn: () => Unit): () => Unit = () =>
+    try fn() catch {
+      case e: Throwable => failed += name; log(s"[bench] $name: $e")
+    }
+
+  /** The leg's official seconds, or None when it never ran or any of its
+    * runs threw.
+    */
+  def official(name: String): Option[Double] =
+    if (failed(name)) None else results.get(name)
 
   private def medianOf(ts: Seq[Double]): Double = {
     val s = ts.sorted; val m = s.length / 2
@@ -122,10 +143,11 @@ final class BenchHarness(reps: Int, wallLimit: Double) {
 
   /** Contention-suspect legs: median >2x the official min (tiny legs
     * under 0.1 s min are skipped — scheduler jitter alone doubles
-    * those). Live state — read AFTER [[run]] for the record's flag.
+    * those; [[failed]] legs too — their spread is not contention).
+    * Live state — read AFTER [[run]] for the record's flag.
     */
   def unstableLegs: Seq[String] = medians.toSeq.collect {
-    case (k, m) if results.get(k).exists(mn => mn >= 0.1 && m > 2.0 * mn) => k
+    case (k, m) if official(k).exists(mn => mn >= 0.1 && m > 2.0 * mn) => k
   }
 
   /** Per-run evidence for the given legs as a JSON object fragment:

@@ -57,6 +57,31 @@ trait Refiner extends Operator {
     added(df).foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
 }
 
+/** Marks an operator that FITS on its input: its disposition step
+  * ([[Disposition.step]]) runs Spark jobs over the frame while the
+  * chain is being built — a centroid collect, a moments pass, a k-means
+  * fit. Every such job replays the whole upstream lineage (an image
+  * decode, a dedup shuffle) unless that lineage is cached, so
+  * [[graft.metrics.MeteredPipeline.dispositionChain]] stages the chain
+  * once before each marked operator and the fits, and the terminal
+  * write, read cached rows. Adds no behavior of its own: rows, flags
+  * and provenance are the same either way.
+  */
+trait FitsOnInput extends Operator {
+  /** False when this instance's configuration runs no such job (an
+    * operator whose fit is switched on by a parameter).
+    */
+  def fitsOnInput: Boolean = true
+}
+
+object FitsOnInput {
+  /** Whether `op`'s disposition step runs Spark jobs over its input. */
+  def apply(op: Operator): Boolean = op match {
+    case f: FitsOnInput => f.fitsOnInput
+    case _ => false
+  }
+}
+
 /** Mark-don't-drop result of one [[RejectingOperator]] in disposition
   * mode: `stillAlive` / `newlyRejected` are flags local to this operator
   * (the chain guards them with the accumulated alive flag), `details` is

@@ -112,12 +112,25 @@ final class MeteredPipeline(val stageName: String, val ops: Seq[Operator]) {
     * deferred single observation is only ever filled by the run's
     * terminal write. Disposition never drops rows, so every boundary
     * flag survives to the terminal frame by construction.
+    *
+    * Staging rule: before each operator that fits on its input
+    * ([[graft.core.FitsOnInput]]) the chain so far is staged
+    * ([[graft.core.Staging.stage]], registered with the caller's
+    * `Staging.scoped` block), so that operator's fit jobs — and the
+    * terminal write — read cached rows instead of replaying the
+    * upstream (an image decode, a dedup shuffle) once per job. This is
+    * the one place that decision is made. The staging `count()` runs
+    * here, before [[MeteredPipeline.observeBoundaries]] attaches the
+    * run's observation, so it cannot fire that observation early.
+    * `stageFits = false` builds the same chain with no staging (the
+    * runner's zero-cache-storage `materialize: recompute` contract).
     */
-  def dispositionChain(input: DataFrame, tagPrefix: String)
+  def dispositionChain(input: DataFrame, tagPrefix: String, stageFits: Boolean = true)
       : (DataFrame, Seq[(String, String)]) = {
-    import graft.core.Disposition
+    import graft.core.{Disposition, FitsOnInput, Staging}
     var df = input
     val bounds = ops.zipWithIndex.map { case (op, i) =>
+      if (stageFits && FitsOnInput(op)) df = Staging.stage(df)
       df = Disposition.step(df, op, s"$tagPrefix$i")
       val c = s"_ob$tagPrefix$i"
       df = df.withColumn(c, col(Disposition.AliveCol))

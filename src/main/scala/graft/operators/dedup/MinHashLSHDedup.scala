@@ -59,7 +59,10 @@ final class MinHashLSHDedup(
     // val: the YAML-plumbing pin reads it back (the two schemes keep
     // identical rows at the shipped geometry, so output equality alone
     // cannot detect a dropped signature_scheme param)
-    val signatureScheme: String = "kmin") extends graft.core.RejectingOperator {
+    val signatureScheme: String = "kmin")
+    extends graft.core.RejectingOperator with graft.core.FitsOnInput {
+  // the hot-bucket cap stages its hot-key list while the chain is built
+  override def fitsOnInput: Boolean = maxBucketSize.isDefined
 
   require(numHashes % numBands == 0, "numHashes must be divisible by numBands")
   require(signatureScheme == "kmin" || signatureScheme == "oph",

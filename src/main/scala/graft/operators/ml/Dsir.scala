@@ -1,6 +1,6 @@
 package graft.operators.ml
 
-import graft.core.Operator
+import graft.core.FitsOnInput
 import graft.functions.{HashFunctions, TextFunctions}
 import graft.ml.ClassifierWeights
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -38,7 +38,7 @@ final class DsirScoreRefiner(
     buckets: Int = 1 << 12,
     bigrams: Boolean = true,
     alpha: Double = 1.0,
-    targetTextCol: String = "text") extends Operator {
+    targetTextCol: String = "text") extends FitsOnInput {
 
   require(buckets > 0, s"buckets $buckets must be positive")
   require(alpha > 0.0, s"smoothing alpha $alpha must be positive")

@@ -149,7 +149,7 @@ final class LogregQualityRefiner(
     iters: Int = 8,
     fitSampleMod: Option[Int] = None,
     posWeight: Double = 1.0,
-    l2: Double = 0.0) extends Refiner {
+    l2: Double = 0.0) extends Refiner with graft.core.FitsOnInput {
 
   val name = "logreg_quality"
 
@@ -229,7 +229,7 @@ final class LogregQualityFilter(
     iters: Int = 8,
     fitSampleMod: Option[Int] = None,
     posWeight: Double = 1.0,
-    l2: Double = 0.0) extends graft.core.RejectingOperator {
+    l2: Double = 0.0) extends graft.core.RejectingOperator with graft.core.FitsOnInput {
 
   val name = "logreg_quality_filter"
 

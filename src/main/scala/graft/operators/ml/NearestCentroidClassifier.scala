@@ -185,7 +185,7 @@ final class CentroidLabelRefiner(
     idCol: String = "id",
     labelCol: String = "label",
     outputCol: String = "pred_label",
-    dims: Int) extends graft.core.Operator {
+    dims: Int) extends graft.core.FitsOnInput {
 
   val name = "centroid_label"
 

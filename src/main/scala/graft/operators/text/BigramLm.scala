@@ -959,7 +959,7 @@ final class BigramLmScoreRefiner(
     idCol: String = "id",
     outCol: String = "bigram_lm_bits",
     countCol: String = "bigram_lm_n",
-    smoothing: String = "addone") extends graft.core.Operator {
+    smoothing: String = "addone") extends graft.core.FitsOnInput {
   require(Seq("addone", "kn", "mkn").contains(smoothing),
     s"unsupported smoothing '$smoothing' (addone | kn | mkn)")
   val name = "bigram_lm_score"

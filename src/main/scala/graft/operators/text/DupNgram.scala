@@ -1,6 +1,6 @@
 package graft.operators.text
 
-import graft.core.Operator
+import graft.core.FitsOnInput
 import graft.functions.{HashFunctions, TextFunctions}
 import graft.plans.kernels
 import org.apache.spark.sql.{Column, DataFrame}
@@ -50,7 +50,7 @@ final class DupNgramRefiner(
     ngramWidth: Int = 8,
     minCount: Int = 2,
     hashName: String = "portable",
-    keepFirst: Boolean = false) extends Operator {
+    keepFirst: Boolean = false) extends FitsOnInput {
 
   require(ngramWidth >= 1, s"ngramWidth $ngramWidth must be >= 1")
   require(minCount >= 2, s"minCount $minCount must be >= 2")

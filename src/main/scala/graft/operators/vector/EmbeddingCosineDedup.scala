@@ -1144,7 +1144,8 @@ final class AutoBucketedCosineDedup(
     maxCellSize: Option[Int] = None,
     anchoredCap: Boolean = false,
     trainSampleMod: Option[Int] = None,
-    keepPolicy: String = "first") extends graft.core.RejectingOperator {
+    keepPolicy: String = "first")
+    extends graft.core.RejectingOperator with graft.core.FitsOnInput {
   require(nprobe >= 1 && nprobe <= numBuckets,
     s"nprobe must be in [1, $numBuckets], got $nprobe")
   require(maxCellSize.forall(_ >= 1),

@@ -105,7 +105,8 @@ final class EmbeddingOutlierFilter(
     k: Int = 8,
     ratioNum: Long = 11L,
     ratioDen: Long = 10L,
-    scale: Double = 1e6) extends graft.core.RejectingOperator {
+    scale: Double = 1e6)
+    extends graft.core.RejectingOperator with graft.core.FitsOnInput {
 
   val name = "embedding_outlier_filter"
 

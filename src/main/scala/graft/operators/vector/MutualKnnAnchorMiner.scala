@@ -25,7 +25,7 @@ final class MutualKnnAnchorMiner(
     k: Int = 5,
     numBands: Int = 4,
     bandWidth: Int = 4,
-    maxBucketSize: Int = 1000) extends graft.core.Operator {
+    maxBucketSize: Int = 1000) extends graft.core.FitsOnInput {
   require(numBands >= 1, s"num_bands must be >= 1, got $numBands")
   require(bandWidth >= 1, s"band_width must be >= 1, got $bandWidth")
 

@@ -127,7 +127,7 @@ final class PcaProjection(
     q: Int = 8,
     scale: Long = Pca.DefaultScale,
     outputCol: String = "embedding_pca",
-    whiten: Boolean = false) extends graft.core.Operator {
+    whiten: Boolean = false) extends graft.core.FitsOnInput {
 
   require(q >= 1 && q <= dims, s"q must be in [1,$dims], got $q")
   val name = "pca_projection"

@@ -30,12 +30,16 @@ object OperatorRegistry {
   def listOperators: Seq[String] = factories.keys.toSeq.sorted
 
   /** Adapt a plain df => df stage (report/aggregation operators whose
-    * class isn't an [[Operator]]) to the registry contract.
+    * class isn't an [[Operator]]) to the registry contract. `fits`:
+    * the stage runs Spark jobs over its input when applied
+    * ([[graft.core.FitsOnInput]]).
     */
   private def wrap(opName: String,
-      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Operator =
-    new Operator {
+      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      fits: Boolean = false): Operator =
+    new graft.core.FitsOnInput {
       val name: String = opName
+      override def fitsOnInput: Boolean = fits
       def apply(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = f(df)
     }
 
@@ -596,7 +600,7 @@ object OperatorRegistry {
       groupCol = p.str("group_field", "source"),
       budgetNum = p.long("budget_num").getOrElse(sys.error(
         "token_budget_waterfill needs budget_num/budget_den (budget = corpus total * num/den)")),
-      budgetDen = p.long("budget_den", 1L))(_)))
+      budgetDen = p.long("budget_den", 1L))(_), fits = true))
 
   register("conversation_assembly", p => new graft.operators.text.ConversationAssembly(
     keyCol = p.str("key_field", "user_id"),
@@ -612,7 +616,7 @@ object OperatorRegistry {
     new graft.operators.text.DomainQualityShrunk(
       domainCol = p.str("domain_field", "source"),
       textCol = p.str("text_field", "text"),
-      pseudoCount = p.long("pseudo_count", 25L))(_)))
+      pseudoCount = p.long("pseudo_count", 25L))(_), fits = true))
 
   register("conversation_quality", p => new graft.operators.text.ConversationQuality(
     keyCol = p.str("key_field", "user_id"),

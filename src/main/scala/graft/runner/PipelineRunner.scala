@@ -182,6 +182,9 @@ object PipelineRunner {
     // (framework/executor.py:100-124), which multiplies full scans by the
     // stage count at 100 TB.
     val timed = conf.executor.metricsTimed && !rejects
+    // materialize=recompute promises zero cache storage: it also turns
+    // off the chain staging before operators that fit on their input
+    val cache = conf.executor.rejectedMaterialize != "recompute"
     val instrumented: Seq[(String, () => Seq[OperatorCounts])] =
       if (rejects) {
         // disposition mode counts via alive-flag snapshots + ONE
@@ -191,8 +194,8 @@ object PipelineRunner {
         // MeteredPipeline.dispositionChain
         val staged = resolvedStages.zipWithIndex.map { case (st, si) =>
           val ops = st.operators.map(o => OperatorRegistry.create(o.name, o.params))
-          val (out, bounds) =
-            new MeteredPipeline(st.name, ops).dispositionChain(df, s"_s${si}o")
+          val (out, bounds) = new MeteredPipeline(st.name, ops)
+            .dispositionChain(df, s"_s${si}o", stageFits = cache)
           df = out
           st.name -> bounds
         }
@@ -250,7 +253,6 @@ object PipelineRunner {
       // (right for compute-heavy chains); materialize=recompute trades a
       // second source scan for zero cache storage (right when caching
       // the full annotated frame costs more than re-scanning).
-      val cache = conf.executor.rejectedMaterialize != "recompute"
       val annotated = if (cache) df.persist(StorageLevel.MEMORY_AND_DISK) else df
       try {
         writer(Disposition.passed(annotated)) // fills every observation

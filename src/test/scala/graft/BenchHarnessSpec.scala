@@ -100,6 +100,31 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(h.results("esc") < 0.2) // official min stays the honest fast run
   }
 
+  test("a leg that throws on one rep is failed: no official value, the suite runs on") {
+    // throws fast on the first warm rep, sleeps slow on every other run —
+    // the time-to-exception would be the min, a fake fast time
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val throwing: () => Unit = () =>
+      if (calls.incrementAndGet() == 2) throw new IllegalStateException("boom")
+      else Thread.sleep(120)
+    val logged = scala.collection.mutable.ArrayBuffer.empty[String]
+    val h = new graft.core.BenchHarness(reps = 3, wallLimit = 1.0)
+    h.run(Seq(
+      "ctl" -> h.failSafe("ctl", logged += _)(throwing),
+      "calm" -> h.failSafe("calm", logged += _)(leg(Set.empty))))
+    assert(h.failed.toSeq == Seq("ctl"))
+    assert(logged.size == 1 && logged.head.contains("ctl") && logged.head.contains("boom"),
+      logged.toString)
+    // the harness did time the throwing rep — the raw min IS the fake
+    // fast number, which `official` must never publish
+    assert(h.results("ctl") < 0.1, h.repTimes("ctl").toString)
+    assert(h.official("ctl").isEmpty)
+    assert(!h.unstableLegs.contains("ctl"))
+    // the other leg and the later passes are untouched
+    assert(h.repTimes("ctl").length == 3 && h.repTimes("calm").length == 3)
+    assert(h.official("calm").exists(_ < 0.1))
+  }
+
   test("detailJson carries warmup + every observed run for the asked legs") {
     val h = new graft.core.BenchHarness(reps = 2, wallLimit = 0.05)
     h.run(Seq("x" -> leg(Set(2)), "y" -> leg(Set.empty)))

@@ -159,4 +159,148 @@ class DispositionSpec extends AnyFunSuite {
       .collect { case l: LeafNode => l }
     assert(leaves.size == 1, s"expected 1 scan leaf, got: $leaves")
   }
+
+  // ---- operators that fit on their input (core.FitsOnInput) ----
+
+  /** Every registry operator's input shape at once: documents with a
+    * 64-d embedding, label, media and event columns. The upstream filter
+    * counts its evaluations, so a job that replays the chain below an
+    * operator shows up in `evals`.
+    */
+  private lazy val (fitFixture, evals, sidePath) = {
+    val emb = table("embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    val side = java.nio.file.Files.createTempDirectory("graft_fit_side").toString + "/t"
+    table("documents").select(col("doc_id"), col("doc_id").as("id"), col("text"))
+      .limit(20).write.parquet(side)
+    val acc = spark.sparkContext.longAccumulator("fit_fixture_evals")
+    val probe = udf { (_: Long) => acc.add(1); true }
+    val nullMedia = struct(lit(null).cast("binary").as("bytes"), lit("x").as("path"))
+    val docs = table("documents")
+      .join(emb, col("vec_id") === col("doc_id"), "left").drop("vec_id")
+      .withColumn("id", col("doc_id"))
+      .withColumn("url", concat(lit("https://site"), col("doc_id") % 7, lit(".com/p/"), col("doc_id")))
+      .withColumn("label_num", (col("doc_id") % 3).cast("long"))
+      .withColumn("label_bool", col("doc_id") % 2 === 0)
+      .withColumn("lm_perplexity", (col("doc_id") % 97).cast("double"))
+      .withColumn("image", nullMedia).withColumn("audio", nullMedia)
+      .withColumn("video", nullMedia)
+      .withColumn("image_embedding", col("embedding"))
+      .withColumn("text_embedding", col("embedding"))
+      .withColumn("user_id", col("doc_id") % 10).withColumn("event_id", col("doc_id"))
+      .withColumn("ts", timestamp_seconds(col("doc_id")))
+      .withColumn("event_type", lit("user")).withColumn("props", col("text"))
+      .filter(probe(col("doc_id")))
+    (Disposition.init(docs), acc, side)
+  }
+
+  /** (jobs started, upstream row evaluations) while building one
+    * disposition step of `op` over the fixture.
+    */
+  private def stepCost(op: graft.core.Operator): (Int, Long) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    val e0 = evals.value
+    try {
+      // operators that stage their own intermediates release them here
+      graft.core.Staging.scoped { Disposition.step(fitFixture, op, "_fit") }
+      org.apache.spark.ListenerDrain(sc)
+      (jobs.get(), evals.value - e0)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def create(name: String, params: (String, Any)*): graft.core.Operator =
+    graft.runner.OperatorRegistry.create(name, graft.runner.Params(params.toMap))
+
+  test("marked operators run jobs over their input while the chain is built; text_curation's run none") {
+    val marked = Seq(
+      create("embedding_outlier_filter", "vector_field" -> "embedding", "id_field" -> "doc_id"),
+      create("pca_projection", "embedding_field" -> "embedding", "dims" -> 64, "components" -> 4),
+      create("embedding_cosine_deduplicator", "embedding_field" -> "embedding",
+        "id_field" -> "doc_id", "num_buckets" -> 4),
+      create("mutual_knn_anchor_miner", "embedding_field" -> "embedding", "id_field" -> "doc_id"),
+      create("centroid_label", "embedding_field" -> "embedding", "id_field" -> "doc_id",
+        "label_field" -> "label_num", "dims" -> 64),
+      create("bigram_lm_score", "text_field" -> "text", "id_field" -> "doc_id"),
+      create("dup_ngram", "text_field" -> "text", "id_field" -> "doc_id"),
+      create("dsir_score", "target_path" -> sidePath, "text_field" -> "text"),
+      create("logreg_quality", "id_field" -> "doc_id", "label_field" -> "label_bool"),
+      create("logreg_quality_filter", "id_field" -> "doc_id", "label_field" -> "label_bool"),
+      create("minhash_lsh_deduplicator", "id_field" -> "doc_id", "max_bucket_size" -> 5),
+      create("token_budget_waterfill", "budget_num" -> 1, "budget_den" -> 2),
+      create("domain_quality_shrunk"))
+    marked.foreach { op =>
+      assert(graft.core.FitsOnInput(op), op.name)
+      val (jobs, ev) = stepCost(op)
+      assert(jobs >= 1 && ev > 0, s"${op.name}: $jobs jobs, $ev upstream evaluations")
+    }
+    // the text_curation chain (perfbench's params): none is marked, and
+    // building it runs no job — it never takes the staging path
+    val text = Seq(
+      create("text_length_filter", "min_length" -> 200, "text_field" -> "text"),
+      create("gopher_repetition_filter", "text_field" -> "text"),
+      create("pii_redaction", "text_field" -> "text"),
+      create("ngram_novelty", "text_field" -> "text", "id_field" -> "id"),
+      create("minhash_lsh_deduplicator", "text_field" -> "text", "id_field" -> "id",
+        "signature_scheme" -> "oph"))
+    text.foreach { op =>
+      assert(!graft.core.FitsOnInput(op), op.name)
+      assert(stepCost(op) == (0, 0L), op.name)
+    }
+  }
+
+  test("every registry operator is marked iff building its step replays the input") {
+    // defaults plus the fixture's column names; operators with a side
+    // input (a benchmark set, a prior snapshot, a training corpus) read
+    // it from `sidePath` — jobs over a side input replay nothing
+    val base = Map[String, Any](
+      "text_field" -> "text", "id_field" -> "doc_id", "embedding_field" -> "embedding",
+      "vector_field" -> "embedding", "url_field" -> "url", "source_field" -> "source",
+      "length_field" -> "n_chars", "image_field" -> "image", "label_field" -> "lang",
+      "words" -> java.util.Arrays.asList("the", "a"),
+      "query_terms" -> java.util.Arrays.asList("the"),
+      "raters" -> java.util.Arrays.asList("gopher"), "min_votes" -> 1,
+      "benchmark_path" -> sidePath, "target_path" -> sidePath, "train_path" -> sidePath,
+      "prior_path" -> sidePath, "dims" -> 64, "in_dims" -> 64, "budget_num" -> 1)
+    val overrides = Map[String, Map[String, Any]](
+      "centroid_label" -> Map("label_field" -> "label_num"),
+      "logreg_quality" -> Map("label_field" -> "label_bool"),
+      "logreg_quality_filter" -> Map("label_field" -> "label_bool"))
+    val builtIn = graft.runner.OperatorRegistry.listOperators
+      .map(name => name -> graft.runner.OperatorRegistry.create(name,
+        graft.runner.Params(base ++ overrides.getOrElse(name, Map.empty))))
+      // other suites in this JVM register operators of their own
+      .filter { case (_, op) =>
+        val c = op.getClass.getName
+        c.startsWith("graft.operators.") || c.startsWith("graft.runner.")
+      }
+    assert(builtIn.size > 80, builtIn.size)
+    val wrong = builtIn.flatMap { case (name, op) =>
+      val (jobs, ev) = stepCost(op)
+      if (graft.core.FitsOnInput(op) == (ev > 0)) None
+      else Some(s"$name: marked=${graft.core.FitsOnInput(op)}, $jobs jobs, $ev upstream evaluations")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("dispositionChain stages the chain once before each fitting operator, never under stageFits=false") {
+    val ops = Seq(
+      create("text_length_filter", "min_length" -> 200, "text_field" -> "text"),
+      create("embedding_outlier_filter", "vector_field" -> "embedding", "id_field" -> "doc_id"),
+      create("pca_projection", "embedding_field" -> "embedding", "dims" -> 64, "components" -> 4))
+    def stagedBy(stageFits: Boolean): Int = graft.core.Staging.scoped {
+      val before = graft.core.Staging.liveCount
+      new graft.metrics.MeteredPipeline("s", ops)
+        .dispositionChain(fitFixture, "_st", stageFits)
+      graft.core.Staging.liveCount - before
+    }
+    assert(stagedBy(stageFits = true) == 2)
+    assert(stagedBy(stageFits = false) == 0)
+  }
 }

@@ -308,8 +308,10 @@ class KernelSpec extends AnyFunSuite {
     import spark.implicits._
     val bands = Seq(Seq(0, 1, 2, 3), Seq(4, 5, 6, 7), Seq(1, 3, 5, 7))
     val allCoords = bands.flatten.distinct.sorted
+    // try_element_at: a coordinate past a short vector's end is NULL
+    // (the missing-coord arm), where ANSI element_at would throw
     def scaled(vec: org.apache.spark.sql.Column, c: Int) =
-      floor(element_at(vec, c + 1).cast("double") * lit(1000000.0d))
+      floor(try_element_at(vec, lit(c + 1)).cast("double") * lit(1000000.0d))
     val emb = TestSpark.table("embeddings")
       .select(col("vec_id"), col("embedding")).limit(300)
       // short + null-slot vectors exercise the missing-coord null arm

@@ -1309,4 +1309,65 @@ class RunnerSpec extends AnyFunSuite {
     assert(rej.select(col("_rejection_details.operator")).head().getString(0)
       == "ngram_containment_dedup")
   }
+
+  test("fitting operators read a staged chain: the upstream refiner runs once per row, outputs unchanged") {
+    val base = java.nio.file.Files.createTempDirectory("graft_fitstage").toString
+    val emb = table("embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("raw"))
+    // planted near-copies under fresh ids, so the cosine dedup rejects too
+    emb.unionByName(emb.limit(30).withColumn("vec_id", col("vec_id") + lit(100000L)))
+      .repartition(4).write.parquet(s"$base/in")
+    val n = spark.read.parquet(s"$base/in").count()
+    // the upstream refiner counts its evaluations: every fit job that
+    // replays the chain below it evaluates it again
+    val evals = spark.sparkContext.longAccumulator("fit_stage_evals")
+    val embed = udf { (v: Seq[Double]) => evals.add(1); v }
+    OperatorRegistry.register("counted_embedding", _ => new graft.core.Refiner {
+      val name = "counted_embedding"
+      def added(df: org.apache.spark.sql.DataFrame) = Seq("embedding" -> embed(col("raw")))
+    })
+    def conf(out: String, materialize: String) = PipelineConf.fromYaml(
+      s"""data_loader:
+         |  type: ParquetLoader
+         |  params: {format: parquet, path: "$base/in"}
+         |stages:
+         |  - name: embed
+         |    operators:
+         |      - name: counted_embedding
+         |  - name: fit
+         |    operators:
+         |      - name: embedding_outlier_filter
+         |        params: {vector_field: embedding, id_field: vec_id, num_clusters: 4}
+         |      - name: pca_projection
+         |        params: {embedding_field: embedding, dims: 64, components: 8}
+         |      - name: embedding_cosine_deduplicator
+         |        params: {embedding_field: embedding, id_field: vec_id, threshold: 0.95, num_buckets: 4}
+         |data_writer:
+         |  type: ParquetDataWriter
+         |  params: {output_path: "$out", table_name: vecs}
+         |executor:
+         |  rejected_samples: {enabled: true, materialize: $materialize}
+         |""".stripMargin)
+    def outputs(out: String) = (spark.read.parquet(s"$out/vecs"),
+      spark.read.parquet(s"${out}_rejected/vecs_rejected"))
+
+    evals.reset()
+    PipelineRunner.run(spark, conf(s"$base/staged", "cache"))
+    assert(evals.value == n, s"refiner evaluated ${evals.value} times over $n rows")
+
+    // materialize=recompute builds the same chain with no staging: every
+    // fit replays the refiner (the behavior staging removes)
+    evals.reset()
+    PipelineRunner.run(spark, conf(s"$base/unstaged", "recompute"))
+    assert(evals.value > 2 * n, s"unstaged chain evaluated the refiner ${evals.value} times")
+
+    val (passed, rejected) = outputs(s"$base/staged")
+    val (passed0, rejected0) = outputs(s"$base/unstaged")
+    assert(passed.count() > 0 && passed.count() + rejected.count() == n)
+    val rejOps = rejected.select(col("_rejection_details.operator")).distinct()
+      .collect().map(_.getString(0)).toSet
+    assert(rejOps == Set("embedding_outlier_filter", "embedding_cosine_dedup"), rejOps)
+    assert(passed.exceptAll(passed0).isEmpty && passed0.exceptAll(passed).isEmpty)
+    assert(rejected.exceptAll(rejected0).isEmpty && rejected0.exceptAll(rejected).isEmpty)
+  }
 }
